@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until every queued listener event has been delivered, so the
+  * benchmark's listener counts are complete when it reads them. The bus
+  * is package-private to Spark, hence this file's package. */
+object BusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
