@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 /** Benchmark entrypoint: times every registered query at the sf dir from
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A query that throws is
   * reported in an "errors" map (and its wall time recorded honestly) so a
@@ -182,7 +183,7 @@ object Bench {
     // Untimed warmup: absorb JVM/codegen/parquet-footer startup cost so the
     // first timed query isn't charged for it (VERDICT r1: q16 artifact).
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => () }
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
@@ -198,7 +199,7 @@ object Bench {
     val scratchJson = try {
       val (sdir, warm) = graft.ops.GovernanceOps.scratchState(sfDir)
       s""""scratch":{"dir":${jstr(sdir)},"warm":${warm.map(jstr).mkString("[", ",", "]")},"n_warm":${warm.size}},"""
-    } catch { case _: Throwable =>
+    } catch { case NonFatal(_) =>
       """"scratch":{"dir":"?","warm":[],"n_warm":-1},"""
     }
     var errors = List.empty[(String, String)]
@@ -221,7 +222,7 @@ object Bench {
       // record the timing ONLY when the count succeeds (r12 ADVICE): a fast
       // failure would log a near-zero sample, inflating max/min spread and
       // potentially flipping contended=true on a clean battery
-      val ok = try { sentinelFn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { sentinelFn(spark, sfDir).count(); true } catch { case NonFatal(_) => false }
       if (ok) sentinelTimes ::= (System.nanoTime() - t0) / 1e9
     }
     sentinel()
@@ -236,7 +237,7 @@ object Bench {
       def once(): (Double, Boolean) = {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             errors ::= (name, Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
             false
         }
@@ -292,7 +293,7 @@ object Bench {
         else {
           val t0 = System.nanoTime()
           val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
+            catch { case NonFatal(_) => false }
           val t = (System.nanoTime() - t0) / 1e9
           if (ok) (name, math.min(best, t), first) else r
         }
@@ -372,7 +373,7 @@ object Bench {
       try {
         val w = new java.io.PrintWriter(path, "UTF-8")
         try w.println(line) finally w.close()
-      } catch { case _: Throwable => () } // read-only cwd must not kill the bench
+      } catch { case NonFatal(_) => () } // read-only cwd must not kill the bench
     // Overwrite guard (r15 verdict #3, see keepCommitted): a
     // gate-FAILING battery never replaces a gate-PASSING committed
     // record — the committed record stays the headline (annotated) and
@@ -385,7 +386,7 @@ object Bench {
           val src = scala.io.Source.fromFile(f, "UTF-8")
           try Some(src.mkString.trim) finally src.close()
         }
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val committedTotal = committedRec.flatMap(j =>
       """"metric":"total","value":([0-9.eE+\-]+)""".r
         .findFirstMatchIn(j).flatMap(_.group(1).toDoubleOption))

@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -237,7 +238,7 @@ object ScanCount {
       val (plans, err) =
         try (queryPlans(spark, name, dir), Option.empty[String])
         catch {
-          case e: Throwable => (Seq.empty[SparkPlan], Some(e.getMessage))
+          case NonFatal(e) => (Seq.empty[SparkPlan], Some(e.getMessage))
         }
       // a query that crashes under the gate's config is a RED result,
       // not a silent pass (r13 ADVICE): it's counted, summarized, and

@@ -21,19 +21,29 @@ object EtlKit {
     * catching a fact table routed through the single-partition mint. */
   val DimIdCap = 1000000L
 
-  /** O-1: CSV scan with header, quoted multi-line nested cells, explicit
-    * schema (reference loader.py:561-568; pandas `read_csv`). PERMISSIVE so
-    * a malformed row degrades to nulls (skip-and-keep-going) instead of
-    * failing the job. */
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
+  /** O-1: CSV scan with header, quoted multi-line nested cells
+    * (reference loader.py:561-568; pandas `read_csv`). Columns bind by
+    * HEADER NAME, as pandas does: the real Kaggle files carry more columns
+    * than `schema` and in another order (`movies_metadata.csv` starts with
+    * `adult`, `ratings.csv` with `userId`), so a positional schema would
+    * read the wrong cells. `schema`'s fields are selected by name, in its
+    * order; a field missing from the header fails here, naming it. Every
+    * CSV schema in [[graft.model.RefSchemas]] is all-string, which is what
+    * a header-bound read yields. PERMISSIVE so a malformed row degrades to
+    * nulls (skip-and-keep-going) instead of failing the job. */
+  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val raw = spark.read
       .option("header", "true")
       .option("multiLine", "true")
       .option("escape", "\"")
       .option("mode", "PERMISSIVE")
-      .schema(schema)
       .csv(path)
+    val missing = schema.fieldNames.filterNot(raw.columns.contains)
+    require(missing.isEmpty, s"$path: header lacks column(s) " +
+      s"${missing.mkString(", ")}; it has ${raw.columns.mkString(", ")}")
+    raw.select(schema.fieldNames.toSeq.map(col): _*)
       .withColumn(SeqCol, monotonically_increasing_id())
+  }
 
   /** Python `int(str)` strict parse: digits only (no floats), else NULL.
     * Used for the cast-or-drop id filters (P-2/P-3, loader.py:122-127). */

@@ -1121,7 +1121,8 @@ object GovernanceOps {
       closureBuilds.incrementAndGet()
       val corpus = corpusWithNearDups(s, d)
       val pairs = sharedPairs(s, d).select(col("id1"), col("id2"))
-      StarCC.connectedComponents(corpus.select(col("doc_id")), pairs)._1
+      OpsKit.labeled(s, "near-dup labels: connected components")(
+        StarCC.connectedComponents(corpus.select(col("doc_id")), pairs)._1)
     })
 
   // ---- HyperANF machinery shared by q261 (neighborhood function) and
